@@ -76,22 +76,12 @@ final class Connector(spark: SparkSession, baseUri: String) {
     val target = new Path(base, key).toString
     format match {
       case "csv" | "parquet" =>
-        // the S4 emptiness probe would otherwise execute the full upstream
-        // plan twice (once to find a first row, once to save) - persist so
-        // the probe's work is reused by the write
-        val cached = df.persist()
-        try {
-          if (cached.isEmpty) {
-            log.info("empty frame - no file written to {}", target)
-            false
-          } else {
-            log.info("writing {} to {}", format: Any, target: Any)
-            val w = cached.write.mode("overwrite")
-            (if (format == "csv") w.option("header", "true") else w)
-              .format(format).save(target)
-            true
-          }
-        } finally cached.unpersist()
+        writeNonEmpty(df, target) {
+          log.info("writing {} to {}", format: Any, target: Any)
+          val w = df.write.mode("overwrite")
+          (if (format == "csv") w.option("header", "true") else w)
+            .format(format).save(target)
+        }
       case other => throw new UnsupportedFormatException(other)
     }
   }
@@ -102,26 +92,34 @@ final class Connector(spark: SparkSession, baseUri: String) {
     * partition untouched, which makes incremental loads idempotent at the
     * sink (re-delivering a day is safe) and gives readers partition pruning
     * for free. Static overwrite (the default) would wipe the whole table —
-    * the option scopes the overwrite to partitions present in `df`.
+    * the option scopes the overwrite to partitions present in `df`. An empty
+    * frame is skipped, as in [[write]].
     */
   def writePartitioned(df: DataFrame, key: String,
       partitionCols: Seq[String]): Boolean = {
     val target = new Path(base, key).toString
-    val cached = df.persist()
-    try {
-      if (cached.isEmpty) {
-        log.info("empty frame - no partitions written to {}", target)
-        false
-      } else {
-        log.info("writing dynamic partitions {} to {}",
-          partitionCols.mkString(","), target: Any)
-        cached.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partitionCols: _*)
-          .parquet(target)
-        true
-      }
-    } finally cached.unpersist()
+    writeNonEmpty(df, target) {
+      log.info("writing dynamic partitions {} to {}",
+        partitionCols.mkString(","), target: Any)
+      df.write
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partitionCols: _*)
+        .parquet(target)
+    }
   }
+
+  /** The S4 skip (`s3.py:93-95`): probe for a first row BEFORE the target is
+    * touched, so an empty frame leaves whatever the key holds as it was.
+    * Nothing is cached: the probe and the save each run the plan, so the
+    * probe costs one more read of the input.
+    */
+  private def writeNonEmpty(df: DataFrame, target: String)(save: => Unit): Boolean =
+    if (df.isEmpty) {
+      log.info("empty frame - no file written to {}", target)
+      false
+    } else {
+      save
+      true
+    }
 }

@@ -20,9 +20,12 @@ import org.apache.spark.sql.types._
   *    multi-path CSV scan with a declared schema. The per-file loop +
   *    concat of the reference collapses into Spark's native file splits.
   *  - transform: [[Report1.transform]] (the whole C2 chain, Catalyst-fused).
+  *    It only builds a plan: no Spark job runs before load.
   *  - load: timestamped target key + format-dispatched write, then the
   *    watermark commit — same ordering (write before commit) as the
   *    reference, so a crash between the two reprocesses rather than loses.
+  *    An empty report writes nothing (S4, at the sink) yet the pending dates
+  *    are still committed, as the reference does.
   */
 final class Report1Job(spark: SparkSession, cfg: JobConfig, clock: Clock) {
 
@@ -83,8 +86,9 @@ final class Report1Job(spark: SparkSession, cfg: JobConfig, clock: Clock) {
     val stamp = java.time.LocalDateTime.now(clock)
       .format(DateTimeFormatter.ofPattern(cfg.target.keyDateFormat))
     val key = s"${cfg.target.key}$stamp.${cfg.target.format}"
-    target.write(report, key, cfg.target.format)
-    logger.info("Target data successfully written.")
+    if (target.write(report, key, cfg.target.format))
+      logger.info("Target data successfully written.")
+    else logger.info("Empty report - no target data written.")
     meta.commit(extractDates.filter(_ >= extractDate))
     logger.info("Meta file successfully updated.")
     true

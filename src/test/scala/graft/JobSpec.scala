@@ -2,10 +2,14 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.time.{Clock, Instant, ZoneOffset}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import graft.config.Configs
 import graft.io.{Connector, UnsupportedFormatException}
 import graft.jobs.Report1Job
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.types._
 
 /** End-to-end incremental job over a date-partitioned local layout: the
@@ -114,6 +118,99 @@ class JobSpec extends SparkSpec {
       "no-op run must not write a new report")
   }
 
+  /** Counts the Spark jobs launched from the test thread and the RDD blocks
+    * cached while it is registered. The listener bus is asynchronous, so
+    * [[snapshot]] first runs a marker job and waits for its end: events arrive
+    * in order, so every earlier event has been seen by then.
+    */
+  private final class JobCounter extends SparkListener {
+    private val sc = spark.sparkContext
+    private val CountKey = "graft.jobspec.counted"
+    private val MarkerKey = "graft.jobspec.marker"
+    private val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    private val started = new AtomicInteger
+    private val blocks = new AtomicInteger
+    @volatile private var latch = new CountDownLatch(0)
+
+    private def has(e: SparkListenerJobStart, key: String): Boolean =
+      e.properties != null && e.properties.getProperty(key) != null
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (has(e, MarkerKey)) markerJobs.add(e.jobId)
+      else if (has(e, CountKey)) started.incrementAndGet()
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      if (markerJobs.remove(e.jobId)) latch.countDown()
+
+    override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+      if (e.blockUpdatedInfo.blockId.isRDD &&
+        e.blockUpdatedInfo.storageLevel.isValid) blocks.incrementAndGet()
+
+    /** Run `body` on this thread with its jobs counted. */
+    def counted[A](body: => A): A = {
+      sc.setLocalProperty(CountKey, "1")
+      try body finally sc.setLocalProperty(CountKey, null)
+    }
+
+    private def flush(): Unit = {
+      latch = new CountDownLatch(1)
+      sc.setLocalProperty(MarkerKey, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(MarkerKey, null)
+      assert(latch.await(60, TimeUnit.SECONDS), "listener marker never arrived")
+    }
+
+    /** (counted jobs, cached RDD blocks) so far. */
+    def snapshot(): (Int, Int) = { flush(); (started.get, blocks.get) }
+  }
+
+  test("extract and transform launch no job; load caches nothing") {
+    val root = Files.createTempDirectory("graftjob_jobs")
+    val cfg = Configs.load(configFile(root).toString)
+    val job = new Report1Job(spark, cfg, clock)
+    assert(job.extractDates.nonEmpty)
+    val sc = spark.sparkContext
+    val persistedBefore = sc.getPersistentRDDs.keySet
+    val counter = new JobCounter
+    sc.addSparkListener(counter)
+    try {
+      val report = counter.counted(job.transform(job.extract()))
+      assert(counter.snapshot() == (0, 0), "extract/transform must only plan")
+      counter.counted(job.load(report))
+      val (jobs, cachedBlocks) = counter.snapshot()
+      assert(jobs > 0, "load runs the report")
+      assert(cachedBlocks == 0, "load must not cache the report")
+      assert(sc.getPersistentRDDs.keySet == persistedBefore,
+        "load must leave no persisted RDD behind")
+    } finally sc.removeSparkListener(counter)
+  }
+
+  test("weekend-shaped increment: lag day only, no report, meta committed") {
+    val root = Files.createTempDirectory("graftjob_weekend")
+    val cfg = Configs.load(configFile(root).toString)
+    new Report1Job(spark, cfg, clock).run()
+    val outDir = root.resolve("trg").resolve("report1")
+    val firstRun = Files.list(outDir).toArray.map(_.toString).toSeq
+
+    // next day: 04-19 (has files) feeds the lag, 04-20 has no files
+    val nextDay =
+      Clock.fixed(Instant.parse("2021-04-20T12:30:00Z"), ZoneOffset.UTC)
+    val job = new Report1Job(spark, cfg, nextDay)
+    assert(job.extractDate == "2021-04-20")
+    assert(job.extractDates == Seq("2021-04-19", "2021-04-20"))
+    val bars = job.extract()
+    assert(!bars.isEmpty, "the lag day's bars are read")
+    val report = job.transform(bars)
+    assert(report.isEmpty)
+    job.load(report)
+
+    assert(Files.list(outDir).toArray.map(_.toString).toSeq == firstRun,
+      "an empty report writes no report directory")
+    val meta = Files.readString(root.resolve("trg").resolve("meta").resolve("meta.csv"))
+    assert(meta.endsWith("2021-04-19,2021-04-19 12:30:00\n" +
+      "2021-04-20,2021-04-20 12:30:00\n"), meta)
+  }
+
   test("connector rejects unknown formats with a typed exception") {
     val root = Files.createTempDirectory("graftconn")
     val c = new Connector(spark, root.toUri.toString)
@@ -216,5 +313,24 @@ class JobSpec extends SparkSpec {
     val c = new Connector(spark, root.toUri.toString)
     import spark.implicits._
     assert(!c.write(Seq.empty[(String, Long)].toDF("name", "n"), "out", "parquet"))
+  }
+
+  test("empty frame write leaves the key as it was") {
+    val root = Files.createTempDirectory("graftconn5")
+    val c = new Connector(spark, root.toUri.toString)
+    import spark.implicits._
+    val empty = Seq.empty[(String, Long)].toDF("name", "n")
+    // a fresh key gets no path at all
+    assert(!c.write(empty, "fresh", "parquet"))
+    assert(!Files.exists(root.resolve("fresh")))
+    // an existing key keeps its files: same names, same bytes
+    assert(c.write(Seq(("x", 1L)).toDF("name", "n"), "kept", "parquet"))
+    def files(): Map[String, Int] =
+      c.listPrefix("kept").map(f => f -> java.util.Arrays.hashCode(
+        Files.readAllBytes(java.nio.file.Paths.get(new java.net.URI(f))))).toMap
+    val before = files()
+    assert(before.keys.exists(_.endsWith(".parquet")))
+    assert(!c.write(empty, "kept", "parquet"))
+    assert(files() == before)
   }
 }

@@ -57,6 +57,10 @@ class Report1Spec extends SparkSpec {
     val out = Report1.transform(fixture.limit(0), extractDate = "2021-04-17")
     assert(out.isEmpty)
     assert(out.columns.length == 8)
+    def namesAndTypes(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    assert(namesAndTypes(out) == namesAndTypes(
+      Report1.transform(fixture, extractDate = "2021-04-17")))
   }
 
   test("rows with any null are dropped before aggregation") {
