@@ -34,9 +34,9 @@ final class Connector(spark: SparkSession, baseUri: String) {
     base.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Object keys under a prefix — reference `list_files_in_prefix`
-    * (`s3.py:52-63`). Drives partition pruning: only pending dates' prefixes
-    * are ever listed or read (the reference's one real optimization,
-    * SURVEY.md §4.1).
+    * (`s3.py:52-63`): every file key the file system lists, hidden ones
+    * such as `_SUCCESS` included. It names files; it does not feed the job's
+    * scan, which reads the date prefixes themselves ([[readCsv]]).
     */
   def listPrefix(prefix: String): Seq[String] = {
     val p = new Path(base, prefix)
@@ -50,10 +50,27 @@ final class Connector(spark: SparkSession, baseUri: String) {
     out.toSeq.sorted
   }
 
-  /** Multi-file CSV scan with an explicit schema (no inference pass — two
+  /** Full URI of `prefix` under the base if it exists (one `exists` call),
+    * ready for [[readCsv]]; a date with no prefix (a weekend) gives None.
+    */
+  def existingPrefix(prefix: String): Option[String] = {
+    val p = new Path(base, prefix)
+    if (fs.exists(p)) Some(p.toString) else None
+  }
+
+  /** Multi-path CSV scan with an explicit schema (no inference pass — two
     * scans of 100 TB to guess types is wrong; the reference's pandas
     * inference is replaced by declared types, SURVEY.md §4.4.3). Zero paths
     * → typed empty relation (reference S4 fallback, improved: schema kept).
+    *
+    * A path may be a file or a directory (a date prefix): directories are
+    * read recursively, so Spark lists each one once while planning and the
+    * caller lists nothing. `recursiveFileLookup` also turns partition
+    * inference off, so a `k=v` subdirectory adds no column and the schema
+    * stays the declared one. Deviation from [[listPrefix]], which returns
+    * every key: Spark skips hidden files and directories (names starting
+    * with `_` or `.`, such as `_SUCCESS` and `.crc` sidecars), so they are
+    * never parsed as bars. Every path must exist.
     */
   def readCsv(paths: Seq[String], schema: StructType,
       header: Boolean = true, sep: String = ","): DataFrame =
@@ -64,6 +81,7 @@ final class Connector(spark: SparkSession, baseUri: String) {
         .schema(schema)
         .option("header", header.toString)
         .option("sep", sep)
+        .option("recursiveFileLookup", "true")
         .csv(paths: _*)
 
   /** Format-dispatched write — reference `write_df_to_s3` (`s3.py:85-107`):

@@ -14,11 +14,14 @@ import org.apache.spark.sql.types._
   * (`xetra/transformers/xetra_transformer.py:234-244`) as
   * extract → transform → load over lazy DataFrames:
   *
-  *  - extract: watermark resolves pending dates (MetaStore), the connector
-  *    lists exactly those date prefixes (driver-side partition pruning — the
-  *    reference's one manual optimization, SURVEY.md §4.1) and issues ONE
-  *    multi-path CSV scan with a declared schema. The per-file loop +
-  *    concat of the reference collapses into Spark's native file splits.
+  *  - extract: watermark resolves pending dates (MetaStore), and ONE CSV
+  *    scan with a declared schema reads exactly the pending date prefixes
+  *    that exist (partition pruning by prefix — the reference's one manual
+  *    optimization, SURVEY.md §4.1). The job checks one `exists` per date and
+  *    lists no file itself: Spark lists each prefix once while planning, on
+  *    the driver for up to 32 prefixes and as a parallel listing job above
+  *    that. The per-file loop + concat of the reference collapses into
+  *    Spark's native file splits.
   *  - transform: [[Report1.transform]] (the whole C2 chain, Catalyst-fused).
   *    It only builds a plan: no Spark job runs before load.
   *  - load: timestamped target key + format-dispatched write, then the
@@ -61,8 +64,8 @@ final class Report1Job(spark: SparkSession, cfg: JobConfig, clock: Clock) {
 
   def extract(): DataFrame = {
     logger.info("Extracting source files started...")
-    val files = extractDates.flatMap(connector.listPrefix)
-    val bars = connector.readCsv(files, schema)
+    val bars =
+      connector.readCsv(extractDates.flatMap(connector.existingPrefix), schema)
     logger.info("Extracting source files finished.")
     bars
   }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * ts → Date/Time, user_id → ISIN, value → price, props.k → volume).
   *
   * Routed through [[Report1.transform]] so the verify harness exercises the
-  * exact production operator chain — explicit-frame windows, min/max/sum agg,
-  * lag pct-change, HALF_EVEN bround, string-date range filter.
+  * exact production operator chain — opening/closing as min_by/max_by in the
+  * daily min/max/sum group-by, lag pct-change, HALF_EVEN bround, string-date
+  * range filter. The oracle keeps the reference's full-frame window form.
   */
 object EventBars {
 
@@ -29,13 +30,13 @@ object EventBars {
       col("value").as("max_value"),
       get_json_object(col("props"), "$.k").cast("long").as("k"))
 
-  private val src = Report1SourceCols(
+  private[graft] val src = Report1SourceCols(
     isin = "user_id", date = "date", time = "time", startPrice = "value",
     minPrice = "min_value", maxPrice = "max_value", tradedVolume = "k",
     columns = Seq("user_id", "date", "time", "value", "min_value",
       "max_value", "k"))
 
-  private val trg = Report1TargetCols(
+  private[graft] val trg = Report1TargetCols(
     openingPrice = "open_value", closingPrice = "close_value",
     minPrice = "min_value", maxPrice = "max_value",
     dailyTradedVolume = "volume", changePrevClosing = "change_prev_open_pct")

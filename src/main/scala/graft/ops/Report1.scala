@@ -39,15 +39,24 @@ final case class Report1TargetCols(
   *
   * Same semantics as the reference's `transform_report1`
   * (`xetra/transformers/xetra_transformer.py:127-208`), re-expressed as one
-  * lazy Column-expression chain (operator order P1→P2→W1→W2→P4→A1→W3→E1→E2→P3
-  * per SURVEY.md §2.7 C2) so Catalyst fuses projection/filter into the scan
-  * and reuses the (isin, date) exchange between the two windows and the
-  * aggregation.
+  * lazy Column-expression chain P1→P2→P4→A1(W1,W2)→W3→E1→E2→P3 (SURVEY.md
+  * §2.7 C2): the reference's W1/W2 broadcast the group's first/last
+  * `StartPrice` by `Time` to every row and A1 then takes `min` of that group
+  * constant, so here they are the aggregates `min_by`/`max_by(StartPrice,
+  * Time)` inside the (isin, date) group-by. Spark pre-aggregates before the
+  * one (isin, date) exchange, so only per-partition partials are shuffled,
+  * and W3's `lag` is the only window. The bars are never sorted by time: a
+  * string `Time` keeps `min_by`'s buffer off the hash aggregate, so each map
+  * partition sorts its bars by (isin, date) for a sort-based partial
+  * aggregate.
   *
   * Parity traps handled here (SURVEY.md §4.4):
-  *  - W1/W2 need an explicit full frame: pandas `transform("first"/"last")`
-  *    broadcasts the group scalar to every row; Spark's default window frame
-  *    (unboundedPreceding→currentRow) silently disagrees for `last`.
+  *  - W1/W2 pick by `Time` within the group, so no window frame is involved.
+  *    The "full frame" trap of the window form (Spark's default frame
+  *    silently disagrees with pandas `transform("last")`) lives only in
+  *    the DuckDB oracle of `report1_daily_ohlcv`. Ties on `Time` within one
+  *    (isin, date) pick an unspecified row, as pandas' unstable sort does
+  *    (SURVEY.md §2.3 tie note).
   *  - E2 rounding is `bround` (HALF_EVEN, = numpy banker's rounding), never
   *    `round` (HALF_UP).
   *  - P3 compares the date column as an ISO *string* (lexicographic), exactly
@@ -73,12 +82,6 @@ object Report1 {
       src: Report1SourceCols = Report1SourceCols(),
       trg: Report1TargetCols = Report1TargetCols(),
       extractDate: String): DataFrame = {
-    // W1/W2: group-constant first/last StartPrice by Time over (isin, date).
-    // Explicit full frame — see scaladoc above.
-    val grp = Window
-      .partitionBy(col(src.isin), col(src.date))
-      .orderBy(col(src.time))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     // W3: previous trading day's *opening* price per isin.
     val byDate = Window.partitionBy(col(src.isin)).orderBy(col(src.date))
 
@@ -86,18 +89,14 @@ object Report1 {
     val daily = bars
       .select(src.columns.map(col): _*)                       // P1 projection
       .na.drop("any")                                         // P2 dropna
-      .withColumn(trg.openingPrice, first(col(src.startPrice)).over(grp)) // W1
-      .withColumn(trg.closingPrice, last(col(src.startPrice)).over(grp))  // W2
       .withColumnsRenamed(Map(                                 // P4 renames
         src.minPrice -> trg.minPrice,
         src.maxPrice -> trg.maxPrice,
         src.tradedVolume -> trg.dailyTradedVolume))
       .groupBy(col(src.isin), col(src.date))                   // A1 agg
       .agg(
-        // min() of a group-constant — kept (not first()) for exact parity
-        // with the reference's agg dict (`xetra_transformer.py:176-184`).
-        min(trg.openingPrice).as(trg.openingPrice),
-        min(trg.closingPrice).as(trg.closingPrice),
+        min_by(col(src.startPrice), col(src.time)).as(trg.openingPrice), // W1
+        max_by(col(src.startPrice), col(src.time)).as(trg.closingPrice), // W2
         min(trg.minPrice).as(trg.minPrice),
         max(trg.maxPrice).as(trg.maxPrice),
         sum(trg.dailyTradedVolume).as(trg.dailyTradedVolume))

@@ -4,6 +4,7 @@ import java.util
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -12,6 +13,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOr
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector for the reference's date-prefixed CSV layout
   * (`"<YYYY-MM-DD>/<date>_BINS_XETR<HH>.csv"` under one base path —
@@ -27,7 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Usage: `spark.read.format("graft.sources.XetraBarsProvider")
   * .load(basePath)`. Pruning is conservative: every pushed filter is also
   * returned as a residual, so Spark re-evaluates rows and correctness never
-  * depends on the pruning logic.
+  * depends on the pruning logic. Listing and readers use the session's
+  * Hadoop configuration (`spark.hadoop.*` and session-set keys such as s3a
+  * credentials), taken once when the scan is built.
   */
 class XetraBarsProvider extends TableProvider
   with org.apache.spark.sql.sources.DataSourceRegister {
@@ -162,11 +166,13 @@ class XetraBarsScanBuilder(path: String, trustLayout: Boolean)
   }
 
   override def build(): Scan =
-    new XetraBarsScan(path, pushed, required, pushedAggs)
+    new XetraBarsScan(path, pushed, required, pushedAggs,
+      SparkSession.active.sessionState.newHadoopConf())
 }
 
 class XetraBarsScan(path: String, pushed: Array[Filter],
-    required: StructType, aggs: Option[Seq[PushedAgg]] = None)
+    required: StructType, aggs: Option[Seq[PushedAgg]],
+    hadoopConf: Configuration)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
@@ -237,7 +243,7 @@ class XetraBarsScan(path: String, pushed: Array[Filter],
   /** Admitted (dateDir, csvFile) pairs from one listing pass. */
   private def listFiles(): Seq[(String, String)] = {
     val base = new Path(path)
-    val fs = base.getFileSystem(new Configuration())
+    val fs = base.getFileSystem(hadoopConf)
     if (!fs.exists(base)) return Nil
     fs.listStatus(base).iterator
       .filter(s => s.isDirectory && dateAdmitted(s.getPath.getName))
@@ -276,7 +282,8 @@ class XetraBarsScan(path: String, pushed: Array[Filter],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new XetraBarsReaderFactory(required)
+    new XetraBarsReaderFactory(required,
+      new SerializableConfiguration(hadoopConf))
 }
 
 case class XetraBarsPartition(file: String) extends InputPartition
@@ -289,12 +296,14 @@ case class XetraBarsAggPartition(fns: Seq[PushedAgg], date: String,
 case class XetraBarsAggRowPartition(values: Seq[String])
   extends InputPartition
 
-class XetraBarsReaderFactory(required: StructType)
-  extends PartitionReaderFactory {
+/** Ships the scan's Hadoop configuration to the executors with the tasks. */
+class XetraBarsReaderFactory(required: StructType,
+    conf: SerializableConfiguration) extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
-      case XetraBarsPartition(file) => new XetraBarsReader(file, required)
-      case a: XetraBarsAggPartition => new XetraBarsAggReader(a)
+      case XetraBarsPartition(file) =>
+        new XetraBarsReader(file, required, conf.value)
+      case a: XetraBarsAggPartition => new XetraBarsAggReader(a, conf.value)
       case r: XetraBarsAggRowPartition => new SingleRowReader(
         InternalRow.fromSeq(r.values.map(v =>
           if (v == null) null else UTF8String.fromString(v))))
@@ -305,7 +314,7 @@ class XetraBarsReaderFactory(required: StructType)
   * streamed, no split/parse/row allocation) and, when requested, the
   * trusted directory date as the min/max partial.
   */
-class XetraBarsAggReader(p: XetraBarsAggPartition)
+class XetraBarsAggReader(p: XetraBarsAggPartition, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
   private var emitted = false
@@ -316,7 +325,7 @@ class XetraBarsAggReader(p: XetraBarsAggPartition)
   private lazy val row: InternalRow = {
     val lines: Long = {
       val fp = new Path(p.file)
-      val fs = fp.getFileSystem(new Configuration())
+      val fs = fp.getFileSystem(conf)
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
         fs.open(fp), java.nio.charset.StandardCharsets.UTF_8))
       try {
@@ -351,14 +360,14 @@ class SingleRowReader(row: InternalRow) extends PartitionReader[InternalRow] {
 /** Per-file CSV reader emitting only the pruned columns. Parse failures
   * null the cell (PERMISSIVE semantics, same as the engine's CSV path).
   */
-class XetraBarsReader(file: String, required: StructType)
+class XetraBarsReader(file: String, required: StructType, conf: Configuration)
   extends PartitionReader[InternalRow] {
 
   private val full = XetraBarsTable.Schema
   private val colIdx = required.fields.map(f => full.fieldIndex(f.name))
   private val in = {
     val p = new Path(file)
-    val fs = p.getFileSystem(new Configuration())
+    val fs = p.getFileSystem(conf)
     new java.io.BufferedReader(new java.io.InputStreamReader(
       fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
   }

@@ -185,6 +185,55 @@ class JobSpec extends SparkSpec {
     } finally sc.removeSparkListener(counter)
   }
 
+  test("extract over at most 32 date prefixes holding over 32 files launches no job") {
+    val root = Files.createTempDirectory("graftjob_listing")
+    val cfg = Configs.load(configFile(root).toString)
+    // 30 more one-row files under one pending prefix: 38 files in the 4
+    // pending prefixes, past Spark's 32-path threshold for a listing job
+    val day = root.resolve("src").resolve("2021-04-17")
+    (0 until 30).foreach { i =>
+      Files.writeString(day.resolve(f"2021-04-17_extra$i%02d.csv"), header +
+        f"\nAT0000A0E9W5,SANT,2021-04-17,16:$i%02d,20.0,20.0,20.0,20.0,1\n")
+    }
+    val job = new Report1Job(spark, cfg, clock)
+    assert(job.extractDates.length <= 32)
+    val sc = spark.sparkContext
+    val counter = new JobCounter
+    sc.addSparkListener(counter)
+    try {
+      val bars = counter.counted(job.extract())
+      assert(counter.snapshot() == (0, 0),
+        "extract must list each prefix on the driver, with no listing job")
+      assert(bars.count() == fixtureRows.count(_._1 >= "2021-04-16") + 30)
+    } finally sc.removeSparkListener(counter)
+  }
+
+  test("a date prefix reads nested files and skips hidden ones, schema as declared") {
+    val root = Files.createTempDirectory("graftconn_prefix")
+    def put(rel: String, vol: Long): Unit = {
+      val f = root.resolve(rel)
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, header +
+        s"\nAT1,SANT,2021-05-03,09:00,1.0,1.0,1.0,1.0,$vol\n")
+    }
+    put("2021-05-03/2021-05-03_BINS_XETR09.csv", 1L)
+    put("2021-05-03/nested/2021-05-03_BINS_XETR10.csv", 2L)
+    put("2021-05-03/k=v/2021-05-03_BINS_XETR11.csv", 4L)
+    // parseable bars a reader must never see
+    put("2021-05-03/_SUCCESS", 100L)
+    put("2021-05-03/.2021-05-03_BINS_XETR09.csv.crc", 1000L)
+    val c = new Connector(spark, root.toUri.toString)
+    // listPrefix names hidden keys too (the local FS's checksum layer hides
+    // `.crc` sidecars from every listing itself)
+    assert(c.listPrefix("2021-05-03").exists(_.endsWith("/_SUCCESS")))
+    assert(c.existingPrefix("2021-05-04").isEmpty)
+    val schema = graft.sources.XetraBarsTable.Schema
+    val bars = c.readCsv(c.existingPrefix("2021-05-03").toSeq, schema)
+    assert(bars.schema == schema, "a k=v directory must add no column")
+    assert(bars.collect().map(_.getAs[Long]("TradedVolume")).sorted.toSeq ==
+      Seq(1L, 2L, 4L))
+  }
+
   test("weekend-shaped increment: lag day only, no report, meta committed") {
     val root = Files.createTempDirectory("graftjob_weekend")
     val cfg = Configs.load(configFile(root).toString)

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Plan-quality regression tests: the physical plans the engine is designed
@@ -59,6 +62,35 @@ class PlanSpec extends SparkSpec {
     // regressed.
     val exchanges = plan.split("Exchange").length - 1
     assert(exchanges <= 3, s"report1 now has $exchanges exchanges")
+  }
+
+  /** Walks into AQE query stages, so nodes of the final plan are found. */
+  private object Stages extends AdaptiveSparkPlanHelper
+
+  test("report1 daily: opening/closing fold into the group-by, lag is the only window") {
+    val report = ops.Report1.transform(ops.EventBars.bars(spark, sfDir),
+      ops.EventBars.src, ops.EventBars.trg, "2024-01-03")
+    report.collect()
+    val plan = report.queryExecution.executedPlan
+    val windows = Stages.collect(plan) { case w: WindowExec => w }
+    assert(windows.map(_.partitionSpec.flatMap(_.references.map(_.name))) ==
+      Seq(Seq("user_id")), s"expected only the lag window by user_id:\n$plan")
+    // one (user_id, date) exchange for the aggregate, one user_id exchange
+    // for the lag
+    val exchanges = Stages.collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.length == 2, s"${exchanges.length} exchanges:\n$plan")
+    assert(!Stages.collect(plan) { case s: SortExec => s }
+      .exists(_.sortOrder.exists(_.references.exists(_.name == "time"))),
+      s"the bars are sorted by time:\n$plan")
+
+    // the sink's emptiness probe (Dataset.isEmpty plans select().limit(1))
+    val probe = report.select().limit(1)
+    probe.collect()
+    val probePlan = probe.queryExecution.executedPlan
+    assert(Stages.collect(probePlan) {
+      case w: WindowExec => w
+      case s: SortExec => s
+    }.isEmpty, s"the emptiness probe windows or sorts:\n$probePlan")
   }
 
   test("cusum: stacked windows share one event_type exchange; mean broadcasts") {

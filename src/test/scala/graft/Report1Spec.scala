@@ -1,7 +1,10 @@
 package graft
 
 import graft.ops.{Report1, Report1SourceCols, Report1TargetCols}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 /** Golden-output test: the reference's canonical 9-row minute-bar fixture →
   * 3-row daily report (FIXTURES.md §1-2; reference
@@ -72,5 +75,77 @@ class Report1Spec extends SparkSpec {
     val got = Report1.transform(withNull, extractDate = "2021-04-17")
       .orderBy("ISIN", "Date").collect().toSeq
     assert(got.map(_.toSeq) == golden.map(_.toSeq))
+  }
+
+  /** The definitional twin of the report: the reference's W1/W2 as
+    * full-frame first/last windows over (ISIN, Date) by Time, then `min` of
+    * those group constants in A1 — the form `Report1.transform` folds into
+    * `min_by`/`max_by` inside the group-by.
+    */
+  private def windowForm(bars: DataFrame, extractDate: String): DataFrame = {
+    val src = Report1SourceCols(); val trg = Report1TargetCols()
+    val grp = Window.partitionBy(col(src.isin), col(src.date))
+      .orderBy(col(src.time))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val byDate = Window.partitionBy(col(src.isin)).orderBy(col(src.date))
+    val daily = bars
+      .select(src.columns.map(col): _*)
+      .na.drop("any")
+      .withColumn(trg.openingPrice, first(col(src.startPrice)).over(grp))
+      .withColumn(trg.closingPrice, last(col(src.startPrice)).over(grp))
+      .withColumnsRenamed(Map(src.minPrice -> trg.minPrice,
+        src.maxPrice -> trg.maxPrice,
+        src.tradedVolume -> trg.dailyTradedVolume))
+      .groupBy(col(src.isin), col(src.date))
+      .agg(min(trg.openingPrice).as(trg.openingPrice),
+        min(trg.closingPrice).as(trg.closingPrice),
+        min(trg.minPrice).as(trg.minPrice),
+        max(trg.maxPrice).as(trg.maxPrice),
+        sum(trg.dailyTradedVolume).as(trg.dailyTradedVolume))
+      .withColumn("__prev", lag(col(trg.openingPrice), 1).over(byDate))
+      .withColumn(trg.changePrevClosing,
+        Report1.pctChange(col(trg.openingPrice), col("__prev")))
+      .drop("__prev")
+    daily.select(daily.schema.fields.map { f =>
+      if (f.dataType == DoubleType) bround(col(f.name), 2).as(f.name)
+      else col(f.name)
+    }.toIndexedSeq: _*).filter(col(src.date) >= lit(extractDate))
+  }
+
+  test("aggregate form equals the window form on seeded random bars") {
+    val dates = (1 to 6).map(d => f"2021-05-0$d")
+    (1 to 3).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      // unique (ISIN, Date, Time): each day's minutes are drawn without
+      // replacement, so neither form meets a tie on Time
+      val bars = for {
+        isin <- Seq("DE01", "DE02", "DE03", "DE04")
+        date <- dates if rnd.nextDouble() < 0.8
+        n = if (rnd.nextDouble() < 0.3) 1 else 2 + rnd.nextInt(20) // single-bar days
+        minute <- rnd.shuffle((0 until 540).toList).take(n)
+      } yield {
+        def px(): Double = (100 + rnd.nextInt(9900)) / 100.0
+        val row = Array[Any](isin, "MNEM", date,
+          f"${8 + minute / 60}%02d:${minute % 60}%02d", px(), px(), px(),
+          px(), rnd.nextInt(10000).toLong)
+        // null rows: one null cell in any column, dropped by P2
+        if (rnd.nextDouble() < 0.05) row(rnd.nextInt(row.length)) = null
+        Row.fromSeq(row.toSeq)
+      }
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(bars, 3),
+        graft.sources.XetraBarsTable.Schema)
+      val kept = bars.filterNot(_.anyNull)
+      assert(kept.length < bars.length, "no null rows drawn")
+      assert(kept.groupBy(r => (r.get(0), r.get(2))).values.exists(_.length == 1),
+        "no single-bar day drawn")
+      Seq(dates.head, dates(2), dates.last, "2021-05-07").foreach { d =>
+        val got = Report1.transform(df, extractDate = d)
+          .orderBy("ISIN", "Date").collect().toSeq
+        val want = windowForm(df, d).orderBy("ISIN", "Date").collect().toSeq
+        assert(got == want, s"seed $seed, extract date $d")
+        if (d != "2021-05-07") assert(got.nonEmpty)
+      }
+    }
   }
 }

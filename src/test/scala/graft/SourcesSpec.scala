@@ -3,7 +3,17 @@ package graft
 import java.nio.file.{Files, Path}
 
 import graft.io.Connector
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{RawLocalFileSystem, UnsupportedFileSystemException}
 import org.apache.spark.sql.functions._
+
+/** The local file system under the `xetratest` scheme, which no Hadoop
+  * default names: a path with that scheme resolves only where a
+  * configuration carries `fs.xetratest.impl`.
+  */
+class XetraTestFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("xetratest:///")
+}
 
 /** The DSv2 connector for the date-prefixed bar layout: date predicates
   * must prune whole directories at planning time, column pruning must reach
@@ -239,5 +249,24 @@ class SourcesSpec extends SparkSpec {
     assert(scan.lastPlannedPartitions == 2,
       s"expected 2 runtime-pruned partitions, planned " +
         s"${scan.lastPlannedPartitions}")
+  }
+
+  test("listing and readers use the session's Hadoop configuration") {
+    val base = new org.apache.hadoop.fs.Path(s"xetratest://${root.toUri.getPath}")
+    intercept[UnsupportedFileSystemException](
+      base.getFileSystem(new Configuration()))
+    // set on the session only; no FileSystem cache, so every open resolves
+    // the scheme from the configuration it was given
+    val keys = Map(
+      "fs.xetratest.impl" -> classOf[XetraTestFileSystem].getName,
+      "fs.xetratest.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val viaSession = spark.read.format("xetra-bars").load(base.toString)
+      // the row reader, the pushed per-file count and the listing
+      assert(viaSession.orderBy("Date", "Time").collect().map(_.toSeq).toSeq ==
+        dsv2.orderBy("Date", "Time").collect().map(_.toSeq).toSeq)
+      assert(viaSession.groupBy().count().collect().head.getLong(0) == 6L)
+    } finally keys.keys.foreach(spark.conf.unset)
   }
 }
